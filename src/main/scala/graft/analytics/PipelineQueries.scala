@@ -1069,10 +1069,10 @@ object PipelineQueries {
   }
 
   /** X82 serving path: the SAME keyword search answered from the stored,
-    * incrementally maintained index — `scanPrunedIn` keeps only files
-    * whose token envelope/bloom admits one of the three terms (the
-    * posting lists live token-clustered, so that is a handful of files
-    * out of the table). Shares [[keywordSearch]]'s oracle VERBATIM: the
+    * incrementally maintained index — an `isin` filter on the indexed
+    * read keeps only files whose token envelope/bloom admits one of the
+    * three terms (the posting lists live token-clustered, so that is a
+    * handful of files out of the table). Shares [[keywordSearch]]'s oracle VERBATIM: the
     * stored index must answer exactly what the from-scratch build
     * answers.
     */
@@ -1081,7 +1081,8 @@ object PipelineQueries {
       import graft.operators.InvertedIndex
       val terms = Seq("vector", "hash", "stream")
       val post = graft.sources.Snapshots
-        .scanPrunedIn(s, storedPostingsTable(s, d), "token", terms).df
+        .readIndexed(s, storedPostingsTable(s, d))._1
+        .filter(col("token").isin(terms: _*))
       val totals = documents(s, d)
         .agg(count(lit(1)).cast("bigint").as("n_docs"))
       InvertedIndex.rankedSearch(post, totals, terms, k = 2, topK = 10)

@@ -10,9 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
-/** AUTOMATIC dynamic file pruning — the optimizer-rule completion of
-  * [[Snapshots.dimPrunedScan]], the way [[graft.sources.SnapshotFileIndex]]
-  * completed the explicit `scanPruned*` calls: a plain
+/** AUTOMATIC dynamic file pruning, as an optimizer rule: a plain
   * `fact.join(dim.filter(...), key)` over a [[Snapshots.readIndexed]] /
   * `format("graft")` fact gets the dim-driven file cut with ZERO graft
   * API calls. The rule detects an inner, left-semi, or outer equi-join
@@ -25,9 +23,9 @@ import org.apache.spark.sql.types._
   * sitting under the session's broadcast threshold (the join would
   * broadcast that side anyway) — executes the bounded side once to
   * collect its distinct join keys, prunes the fact's manifest through
-  * every evidence tier [[Snapshots.scanPrunedIn]] holds (integral
-  * envelopes, UTF-8 string envelopes, widen-era-aware blooms), and swaps
-  * the fact relation's file index for the pruned copy. This is the scan
+  * every evidence tier it holds (integral envelopes, UTF-8 string
+  * envelopes, widen-era-aware blooms), and swaps the fact relation's
+  * file index for the pruned copy. This is the scan
   * cut Delta calls dynamic file pruning; at 100 TB it is the difference
   * between scanning the fact table and scanning one dim slice of it.
   *
@@ -46,15 +44,14 @@ import org.apache.spark.sql.types._
   * outside the narrow type's range is dropped — through the join's own
   * widening cast it can equal no fact value. Anything unprovable — an
   * unbounded dim, an unsupported key type, a non-equi condition, >
-  * `maxKeys` distinct keys — leaves the plan untouched: unlike the
-  * explicit API there is no loud refusal, because the plain join IS the
-  * correct fallback.
+  * `maxKeys` distinct keys — leaves the plan untouched: there is no
+  * loud refusal, because the plain join IS the correct fallback.
   *
   * Registration-scoped like [[MetaAgg]]/[[MaterializedViews]]: plans
   * change only for [[DimFilePrune.enable]]-d table paths. The dim-side
-  * execution happens INSIDE optimization (the same jobs
-  * `dimPrunedScan`'s explicit collect runs); a thread-local re-entrancy
-  * guard keeps that sub-query's own optimization from recursing, and the
+  * execution happens INSIDE optimization (one bounded collect); a
+  * thread-local re-entrancy guard keeps that sub-query's own
+  * optimization from recursing, and the
   * pruned index's `flatForm = false` marker keeps the fixed-point batch
   * from re-pruning its own output.
   */
@@ -63,13 +60,14 @@ object DimFilePrune {
   private val registry =
     new scala.collection.concurrent.TrieMap[String, Int]
 
-  /** Registry key: the FileSystem-qualified absolute path, scheme
-    * stripped — the same form [[SnapshotFileIndex]]'s `rootPath`
-    * (`fs.makeQualified`) reduces to at lookup time. Normalizing with
-    * a bare `new Path(p).toUri.getPath` would leave a RELATIVE enable
+  /** Registry key of every registration-scoped rule (this one,
+    * [[MetaAgg]], [[WindowRewrite]], [[MaterializedViews]]): the
+    * FileSystem-qualified absolute path, scheme stripped — the same form
+    * a scan's qualified root paths reduce to at lookup time. A bare
+    * `new Path(p).toUri.getPath` would leave a RELATIVE registration
     * path relative, and the rule would silently never fire for it.
     */
-  private def norm(spark: SparkSession, p: String): String = {
+  private[plans] def norm(spark: SparkSession, p: String): String = {
     val hp = new org.apache.hadoop.fs.Path(p)
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(hp).toUri.getPath

@@ -59,18 +59,13 @@ object MaterializedViews {
   private val registry =
     new scala.collection.concurrent.TrieMap[String, MvDef]
 
-  private[plans] def norm(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
-
   /** Register `mv` and make sure the rewrite rule is installed on the
     * session (idempotent; uses the runtime extraOptimizations hook, so it
     * works on sessions built without [[graft.GraftExtensions]] too).
     */
   def register(spark: SparkSession, mv: MvDef): Unit = {
-    registry.put(norm(mv.factPath), mv)
-    if (!spark.experimental.extraOptimizations.contains(MvRewriteRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewriteRule
+    registry.put(DimFilePrune.norm(spark, mv.factPath), mv)
+    org.apache.spark.sql.GraftBridge.addOptimization(spark, MvRewriteRule)
   }
 
   def clear(): Unit = registry.clear()
@@ -90,19 +85,15 @@ object MaterializedViews {
     register(spark, MvDef(factPath, mvPath, keys, Some(countCol), sums))
   }
 
-  private[plans] def lookup(path: String): Option[MvDef] =
-    registry.get(norm(path))
-
-  /** Find the MvDef covering a scan's root paths: the single-directory
-    * fact (exact key) or a versioned fact registered at its TABLE ROOT
-    * whose data files all live under it.
+  /** Find the MvDef covering a scan's [[DimFilePrune.norm]]-normalized
+    * root paths: the single-directory fact (exact key) or a versioned
+    * fact registered at its TABLE ROOT whose data files all live under
+    * it.
     */
-  private[plans] def lookupCovering(paths: Seq[String]): Option[MvDef] =
-    paths match {
-      case Seq(single) if registry.contains(norm(single)) =>
-        registry.get(norm(single))
+  private[plans] def lookupCovering(normed: Seq[String]): Option[MvDef] =
+    normed match {
+      case Seq(single) if registry.contains(single) => registry.get(single)
       case _ =>
-        val normed = paths.map(norm)
         registry.collectFirst {
           case (root, d) if normed.forall(_.startsWith(root + "/")) => d
         }
@@ -120,11 +111,11 @@ object MvRewriteRule extends Rule[LogicalPlan] {
       case agg @ Aggregate(groups, aggs, child, _) =>
         (for {
           (paths, filter) <- factScan(child)
-          mv <- lookupCovering(paths)
+          normed = paths.map(DimFilePrune.norm(SparkSession.active, _))
+          mv <- lookupCovering(normed)
           // a versioned-fact MV answers ONLY the exact file set of the
           // version it was refreshed to — never another version
-          if mv.factFiles.forall(_ ==
-            paths.map(p => norm(p)).toSet)
+          if mv.factFiles.forall(_ == normed.toSet)
           rewritten <- tryRewrite(agg, groups, aggs, filter, mv)
         } yield rewritten).getOrElse(agg)
     }

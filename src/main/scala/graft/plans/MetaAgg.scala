@@ -45,21 +45,18 @@ object MetaAgg {
   private val registry =
     new scala.collection.concurrent.TrieMap[String, Unit]
 
-  private def norm(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
-
   /** Enable metadata-aggregate collapse for reads of `tablePath`
     * (idempotent; installs the optimizer rule on first use).
     */
   def enable(spark: SparkSession, tablePath: String): Unit = {
-    registry.put(norm(tablePath), ())
+    registry.put(DimFilePrune.norm(spark, tablePath), ())
     org.apache.spark.sql.GraftBridge.addOptimization(spark, MetaAggRule)
   }
 
   def clear(): Unit = registry.clear()
 
-  private[plans] def enabled(path: String): Boolean =
-    registry.contains(norm(path))
+  private[plans] def enabled(spark: SparkSession, path: String): Boolean =
+    registry.contains(DimFilePrune.norm(spark, path))
 
   private[plans] def isEmpty: Boolean = registry.isEmpty
 }
@@ -86,7 +83,8 @@ object MetaAggRule extends Rule[LogicalPlan] {
       case h: HadoopFsRelation => h.location match {
         case fi: SnapshotFileIndex
             if fi.rootPaths.headOption.exists(rp =>
-              MetaAgg.enabled(rp.toUri.getPath)) => Some(fi)
+              MetaAgg.enabled(SparkSession.active, rp.toUri.getPath)) =>
+          Some(fi)
         case _ => None
       }
       case _ => None

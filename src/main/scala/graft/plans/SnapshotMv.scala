@@ -134,8 +134,8 @@ object SnapshotMv {
     val files = Snapshots.manifest(spark, mv.factTable, latest)
       .map { e =>
         val p = e.path
-        if (new Path(p).isAbsolute) MaterializedViews.norm(p)
-        else MaterializedViews.norm(s"${mv.factTable}/$p")
+        if (new Path(p).isAbsolute) DimFilePrune.norm(spark, p)
+        else DimFilePrune.norm(spark, s"${mv.factTable}/$p")
       }.toSet
     MaterializedViews.register(spark, MaterializedViews.MvDef(
       mv.factTable, s"${mv.mvRoot}/$currentDir", mv.keys,

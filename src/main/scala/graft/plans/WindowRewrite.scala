@@ -52,23 +52,18 @@ object WindowRewrite {
   private val registry =
     new scala.collection.concurrent.TrieMap[String, Unit]
 
-  private def norm(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
-
   /** Enable the rewrite for self-agg-joins over `factPath` (idempotent;
     * installs the optimizer rule on first use).
     */
   def enable(spark: SparkSession, factPath: String): Unit = {
-    registry.put(norm(factPath), ())
-    if (!spark.experimental.extraOptimizations.contains(SelfJoinWindowRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SelfJoinWindowRule
+    registry.put(DimFilePrune.norm(spark, factPath), ())
+    org.apache.spark.sql.GraftBridge.addOptimization(spark, SelfJoinWindowRule)
   }
 
   def clear(): Unit = registry.clear()
 
-  private[plans] def enabled(path: String): Boolean =
-    registry.contains(norm(path))
+  private[plans] def enabled(spark: SparkSession, path: String): Boolean =
+    registry.contains(DimFilePrune.norm(spark, path))
 
   private[plans] def isEmpty: Boolean = registry.isEmpty
 }
@@ -131,7 +126,7 @@ object SelfJoinWindowRule extends Rule[LogicalPlan] {
     if (!probeBase.sameResult(aggBase)) return None
     if (probeBase.output.length != aggBase.output.length) return None
     val path = scanPath(probeBase).getOrElse(return None)
-    if (!WindowRewrite.enabled(path)) return None
+    if (!WindowRewrite.enabled(SparkSession.active, path)) return None
 
     // positional map aggBase attr -> probeBase attr (sameResult => the
     // stripped subtrees are the same plan, so outputs align by position)

@@ -10,16 +10,14 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** CATALYST-NATIVE data skipping for [[Snapshots]] tables: a
   * [[FileIndex]] over the version's manifest, so the ordinary Spark scan
-  * path — not a bespoke `scanPruned*` call — decides which files to read.
-  * `FileSourceStrategy` pushes the query's data filters into
-  * [[listFiles]], where each file's manifest evidence ([min,max]
-  * envelopes, UTF-8 string envelopes, bloom filters) proves files
-  * row-free and drops them BEFORE the scan is planned. The win over the
-  * explicit `scanPrunedBox` API: every `.filter`/`WHERE` on a
-  * [[Snapshots.readIndexed]] frame prunes automatically, composed
-  * filters (`AND`/`OR`/`IN`/`BETWEEN`/prefix) prune too, and the file
-  * cut shows up in the scan's own `numFiles` metric — at 100 TB the
-  * planner reads manifest evidence (KBs) instead of footers (TBs).
+  * path decides which files to read. `FileSourceStrategy` pushes the
+  * query's data filters into [[listFiles]], where each file's manifest
+  * evidence ([min,max] envelopes, UTF-8 string envelopes, bloom filters)
+  * proves files row-free and drops them BEFORE the scan is planned:
+  * every `.filter`/`WHERE` on a [[Snapshots.readIndexed]] frame prunes,
+  * composed filters (`AND`/`OR`/`IN`/`BETWEEN`/prefix) prune too, and
+  * the file cut shows up in the scan's own `numFiles` metric — at 100 TB
+  * the planner reads manifest evidence (KBs) instead of footers (TBs).
   *
   * Soundness rule: a file is dropped only when the evidence PROVES no
   * row can match (`mayMatch` returns false); any unrecognized predicate

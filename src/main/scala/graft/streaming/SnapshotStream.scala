@@ -181,15 +181,14 @@ object SnapshotStream {
     * column out); distinct names keep both.
     *
     * The cut routes through the AUTOMATIC rule
-    * ([[graft.plans.DimFilePruneRule]]) rather than a hand-rolled
-    * [[Snapshots.dimPrunedScan]] call: the batch-preserved LEFT join is
+    * ([[graft.plans.DimFilePruneRule]]): the batch-preserved LEFT join is
     * exactly the rule's outer-join shape (the static side is
     * non-preserved, so pruning it by batch keys is sound), the rule
     * substitutes the batch's plan-time snapshot back as the join input,
     * and a micro-batch frame qualifies through the rule's
     * MATERIALIZED-dim tier (LogicalRDD leaves — no structural row bound
-    * needed; an over-`maxKeys` batch aborts the rewrite, the same
-    * plain-read fallback the explicit path had). The registration is
+    * needed; an over-`maxKeys` batch aborts the rewrite and the join
+    * reads the table plainly). The registration is
     * if-absent (a user's own enable() on the table wins) and stays
     * installed for the stream's LIFETIME — [[lookupJoin]] passes `owned`
     * so a registration this lookup created (reported through

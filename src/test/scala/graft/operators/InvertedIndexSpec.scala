@@ -78,8 +78,7 @@ class InvertedIndexSpec extends SparkSpec {
   test("stored index: IN-pruned scan skips files, append ≡ full rebuild") {
     import graft.sources.Snapshots
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
-    val tbl = java.nio.file.Files.createTempDirectory("graft_invidx")
-      .toString + "/postings"
+    val tbl = freshTable("invidx")
     // two append commits of disjoint doc halves = index maintenance
     Seq(0, 1).foreach { half =>
       val batch = InvertedIndex.postings(
@@ -90,31 +89,32 @@ class InvertedIndexSpec extends SparkSpec {
         tbl, strStatsCols = Seq("token"), bloomCols = Seq("token"))
     }
     val terms = Seq("vector", "hash", "stream")
-    val pruned = Snapshots.scanPrunedIn(spark, tbl, "token", terms)
-    assert(pruned.filesSkipped > 0,
-      s"token-clustered files should skip: kept=${pruned.filesRead}")
-    // pruned scan ≡ unpruned residual scan
+    val (indexed, ix) = Snapshots.readIndexed(spark, tbl)
+    val pruned = indexed.filter(col("token").isin(terms: _*))
+    // pruned scan ≡ unpruned filtered scan
     val unpruned = Snapshots.read(spark, tbl)
       .filter(col("token").isin(terms: _*))
-    assert(pruned.df.count() === unpruned.count())
+    assert(pruned.count() === unpruned.count())
+    assert(ix.lastPrune._1 < ix.lastPrune._2,
+      s"token-clustered files should skip: kept=${ix.lastPrune}")
     // append-maintained index answers exactly the from-scratch search
     val totals = docs.agg(count(lit(1)).cast("bigint").as("n_docs"))
-    val stored = InvertedIndex.rankedSearch(pruned.df, totals, terms)
+    val stored = InvertedIndex.rankedSearch(pruned, totals, terms)
       .collect().toSeq
     val scratch = InvertedIndex.rankedSearch(
       InvertedIndex.postings(docs), totals, terms).collect().toSeq
     assert(stored === scratch && stored.nonEmpty)
   }
 
-  test("scanPrunedIn without evidence reads everything, stays exact") {
+  test("an IN-filtered indexed read without evidence reads everything, " +
+      "stays exact") {
     import graft.sources.Snapshots
-    val tbl = java.nio.file.Files.createTempDirectory("graft_invidx_ne")
-      .toString + "/t"
+    val tbl = freshTable("invidx_ne")
     val post = InvertedIndex.postings(tiny)
     Snapshots.commit(post.repartition(3), tbl) // no stats, no blooms
-    val p = Snapshots.scanPrunedIn(spark, tbl, "token", Seq("join"))
-    assert(p.filesSkipped === 0)
-    assert(p.df.count() ===
+    val p = indexedFilter(tbl, col("token").isin("join"))
+    assert(p.skipped === 0)
+    assert(p.rows.size ===
       post.filter(col("token") === "join").count())
   }
 

@@ -1,20 +1,22 @@
-package graft.sources
+package graft.plans
 
 import graft.SparkSpec
+import graft.sources.Snapshots
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** Property test for [[Snapshots.dimPrunedScan]]'s soundness surface —
-  * like [[SnapshotFileIndexPropertySpec]] pins indexed reads, this pins
-  * the dim-driven cut: for ARBITRARY dim key sets (hits, misses,
-  * out-of-domain values, duplicates, empty — presented at the recorded
-  * width and at a NARROWER one), the pruned scan must return exactly the
-  * rows a plain read filtered to those keys returns. The widened table
-  * drives the era-aware bloom probe (pre-widen files hashed the narrow
-  * type) under the same random key sets — the class of silent row loss
-  * r14's widen fix closed, now property-pinned on this API too.
+/** Property test for [[DimFilePruneRule]]'s soundness surface — like
+  * [[graft.sources.SnapshotFileIndexPropertySpec]] pins indexed reads,
+  * this pins the dim-driven cut: for ARBITRARY dim key sets (hits,
+  * misses, out-of-domain values, duplicates, empty — presented at the
+  * recorded width and at a NARROWER one), a plain semi-join of the
+  * enabled indexed fact against the dim must return exactly the rows a
+  * plain read filtered to those keys returns. The widened table drives
+  * the rule's evolved tier and its era-aware bloom probe (pre-widen
+  * files hashed the narrow type) under the same random key sets.
   */
-class DimPrunedScanPropertySpec extends SparkSpec {
+class DimFilePrunePropertySpec extends SparkSpec {
 
   private def check(prop: Prop, minSuccessful: Int): Unit = {
     val res = SCTest.check(
@@ -22,19 +24,19 @@ class DimPrunedScanPropertySpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  // ---- fixtures (built once per suite) ----------------------------------
+  // ---- fixtures (built once per suite, each table enabled) ---------------
 
   /** k long, range-clustered (envelopes) AND bloomed — both integral
     * evidence tiers active at once.
     */
   private lazy val factTbl: String = {
     import spark.implicits._
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_dpsprop_fact").toString + "/t"
+    val tbl = freshTable("fact")
     val df = (0L until 64L).map(i => (i, i * 10))
       .toDF("k", "v")
       .repartitionByRange(8, col("k")).sortWithinPartitions(col("k"))
     Snapshots.commit(df, tbl, statsCols = Seq("k"), bloomCols = Seq("k"))
+    DimFilePrune.enable(spark, tbl)
     tbl
   }
   private lazy val factRows: Map[Long, Long] =
@@ -47,8 +49,7 @@ class DimPrunedScanPropertySpec extends SparkSpec {
     */
   private lazy val widenTbl: String = {
     import spark.implicits._
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_dpsprop_widen").toString + "/t"
+    val tbl = freshTable("widen")
     val df = (0 until 32).map(i => (i, i * 10L)).toDF("k", "v")
       .repartitionByRange(4, col("k")).sortWithinPartitions(col("k"))
     Snapshots.commit(df, tbl, statsCols = Seq("k"), bloomCols = Seq("k"))
@@ -57,6 +58,7 @@ class DimPrunedScanPropertySpec extends SparkSpec {
     val df2 = (32L until 64L).map(i => (i, i * 10L)).toDF("k", "v")
       .repartitionByRange(4, col("k")).sortWithinPartitions(col("k"))
     Snapshots.commit(df2, tbl, statsCols = Seq("k"), bloomCols = Seq("k"))
+    DimFilePrune.enable(spark, tbl)
     tbl
   }
   private lazy val widenRows: Map[Long, Long] =
@@ -66,16 +68,29 @@ class DimPrunedScanPropertySpec extends SparkSpec {
   /** s string with UTF-8 envelopes only — the string evidence tier. */
   private lazy val strTbl: String = {
     import spark.implicits._
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_dpsprop_str").toString + "/t"
+    val tbl = freshTable("str")
     val df = (0 until 64).map(i => (f"s$i%03d", i.toLong)).toDF("s", "v")
       .repartitionByRange(8, col("s")).sortWithinPartitions(col("s"))
     Snapshots.commit(df, tbl, strStatsCols = Seq("s"))
+    DimFilePrune.enable(spark, tbl)
     tbl
   }
   private lazy val strRows: Map[String, Long] =
     Snapshots.read(spark, strTbl).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The plain fact ⋉ dim join over the indexed read of `tbl` (per-era
+    * for the widened table), collected, with the rule's cut reset first
+    * so [[DimFilePrune.lastCut]] reports THIS join's rewrite (or None).
+    */
+  private def semiJoin(tbl: String, key: String, dim: DataFrame)
+      : Seq[org.apache.spark.sql.Row] = {
+    DimFilePrune.lastCut = None
+    val fact =
+      if (tbl == widenTbl) Snapshots.readIndexedEvolved(spark, tbl)._1
+      else Snapshots.readIndexed(spark, tbl)._1
+    fact.join(dim, col(key) === dim("dk"), "left_semi").collect().toSeq
+  }
 
   // ---- generators --------------------------------------------------------
 
@@ -97,10 +112,10 @@ class DimPrunedScanPropertySpec extends SparkSpec {
 
   // ---- the property -------------------------------------------------------
 
-  /** pruned-scan rows ≡ driver-side filter of the full table. `narrow`
-    * presents the dim keys as INT (dropping unrepresentable ones — a
-    * narrower dim column is exactly the width mismatch the recorded-type
-    * cast exists for).
+  /** join rows ≡ driver-side filter of the full table, and a non-empty
+    * dim gets the rule's rewrite. `narrow` presents the dim keys as INT
+    * (dropping unrepresentable ones — a narrower dim column is exactly
+    * the width mismatch the recorded-type narrowing exists for).
     */
   private def soundOn(tbl: String, full: Map[Long, Long], keys: List[Long],
       narrow: Boolean): Prop = {
@@ -109,50 +124,57 @@ class DimPrunedScanPropertySpec extends SparkSpec {
     val dim =
       if (narrow) ks.map(_.toInt).toDF("dk")
       else ks.toDF("dk")
-    val ps = Snapshots.dimPrunedScan(spark, tbl, "k", dim, "dk")
-    val got = ps.df.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sorted.toList
+    val got = semiJoin(tbl, "k", dim)
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toList
+    val fired = DimFilePrune.lastCut.nonEmpty
     val want = ks.distinct.sorted.flatMap(k => full.get(k).map(v => (k, v)))
-    Prop(got == want) :| s"keys=$ks narrow=$narrow got=$got want=$want"
+    Prop(got == want && (ks.isEmpty || fired)) :|
+      s"keys=$ks narrow=$narrow got=$got want=$want fired=$fired"
   }
 
-  test("pruned scan ≡ plain filtered read for random dim key sets " +
+  test("plain join ≡ plain filtered read for random dim key sets " +
       "(envelopes + blooms, long and int-presented keys)") {
     check(Prop.forAll(longKeys, Gen.oneOf(true, false)) { (keys, narrow) =>
       soundOn(factTbl, factRows, keys, narrow)
     }, minSuccessful = 60)
   }
 
-  test("pruned scan ≡ plain filtered read across a k int→long WIDEN " +
+  test("plain join ≡ plain filtered read across a k int→long WIDEN " +
       "(pre-widen blooms hashed narrow; era-aware probe must not lose rows)") {
     check(Prop.forAll(longKeys, Gen.oneOf(true, false)) { (keys, narrow) =>
       soundOn(widenTbl, widenRows, keys, narrow)
     }, minSuccessful = 60)
   }
 
-  test("pruned scan ≡ plain filtered read for random STRING key sets " +
+  test("plain join ≡ plain filtered read for random STRING key sets " +
       "(UTF-8 envelope tier)") {
     import spark.implicits._
     check(Prop.forAll(strKeys) { keys =>
-      val dim = keys.toDF("dk")
-      val ps = Snapshots.dimPrunedScan(spark, strTbl, "s", dim, "dk")
-      val got = ps.df.collect().map(r => (r.getString(0), r.getLong(1)))
-        .sorted.toList
+      val got = semiJoin(strTbl, "s", keys.toDF("dk"))
+        .map(r => (r.getString(0), r.getLong(1))).sorted.toList
+      val fired = DimFilePrune.lastCut.nonEmpty
       val want = keys.distinct.sorted
         .flatMap(k => strRows.get(k).map(v => (k, v)))
-      Prop(got == want) :| s"keys=$keys got=$got want=$want"
+      Prop(got == want && (keys.isEmpty || fired)) :|
+        s"keys=$keys got=$got want=$want fired=$fired"
     }, minSuccessful = 60)
   }
 
-  test("over-limit dims refuse loudly; empty dims read zero files") {
+  test("over-limit dims leave the join unpruned and exact; empty dims " +
+      "keep zero files") {
     import spark.implicits._
-    val e = intercept[IllegalArgumentException] {
-      Snapshots.dimPrunedScan(spark, factTbl, "k",
-        (0L until 64L).toDF("dk"), "dk", maxKeys = 4)
-    }
-    assert(e.getMessage.contains("unselective"))
-    val ps = Snapshots.dimPrunedScan(spark, factTbl, "k",
-      List.empty[Long].toDF("dk"), "dk")
-    assert(ps.filesRead === 0 && ps.df.count() === 0L)
+    DimFilePrune.enable(spark, factTbl, maxKeys = 4)
+    try {
+      val got = semiJoin(factTbl, "k", (0L until 64L).toDF("dk"))
+      assert(DimFilePrune.lastCut.isEmpty, "rule fired over maxKeys")
+      assert(got.size === factRows.size)
+    } finally DimFilePrune.enable(spark, factTbl)
+    // a dim empty only at run time (a LocalRelation would be folded
+    // away before the rule runs): every one of the 8 files is cut
+    val empty = Snapshots.read(spark, factTbl).filter(col("k") < 0)
+      .select(col("k").as("dk"))
+    assert(semiJoin(factTbl, "k", empty).isEmpty)
+    assert(DimFilePrune.lastCut.exists(c => c._2 == 0 && c._3 == 8),
+      s"expected all 8 files cut: ${DimFilePrune.lastCut}")
   }
 }

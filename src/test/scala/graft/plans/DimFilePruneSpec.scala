@@ -7,13 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** The AUTOMATIC dim-driven file prune ([[DimFilePruneRule]]): a plain
   * `fact.join(dim)` over an enabled indexed snapshot table must get the
-  * same file cut [[Snapshots.dimPrunedScan]] gives explicitly — and must
-  * leave every unprovable shape untouched.
+  * dim-driven file cut — and must leave every unprovable shape untouched.
   */
 class DimFilePruneSpec extends SparkSpec {
-
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_dfpr_$tag").toString + "/t"
 
   private def li = spark.read.parquet(s"$sf001/lineitem.parquet")
     .select(col("l_suppkey"), col("l_extendedprice"))
@@ -187,14 +183,13 @@ class DimFilePruneSpec extends SparkSpec {
 
   test("enable() with a relative path still fires: the registry key is " +
       "FileSystem-qualified, matching the index's rootPath form") {
-    val rel = s"target/graft_dfpr_rel_${System.nanoTime()}/t"
-    val abs = new java.io.File(rel).getAbsolutePath
+    val abs = freshTable("rel")
+    Snapshots.commit(
+      li.repartitionByRange(4, col("l_suppkey"))
+        .sortWithinPartitions(col("l_suppkey")),
+      abs, statsCols = Seq("l_suppkey"))
+    DimFilePrune.enable(spark, relativePath(abs))
     try {
-      Snapshots.commit(
-        li.repartitionByRange(4, col("l_suppkey"))
-          .sortWithinPartitions(col("l_suppkey")),
-        abs, statsCols = Seq("l_suppkey"))
-      DimFilePrune.enable(spark, rel) // RELATIVE form
       DimFilePrune.lastCut = None
       val (fact, _) = Snapshots.readIndexed(spark, abs)
       val j = fact.join(selectiveDim,
@@ -203,12 +198,7 @@ class DimFilePruneSpec extends SparkSpec {
         li.join(selectiveDim, col("l_suppkey") === col("s_suppkey")).count())
       assert(DimFilePrune.lastCut.exists(_._3 > 0),
         s"relative enable never matched: ${DimFilePrune.lastCut}")
-    } finally {
-      DimFilePrune.clear()
-      val p = new org.apache.hadoop.fs.Path(abs).getParent
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    }
+    } finally DimFilePrune.clear()
   }
 
   test("an empty dim key set cuts every fact file and returns no rows") {

@@ -11,9 +11,9 @@ class MaterializedViewsSpec extends SparkSpec {
   private def freshMv(): String =
     java.nio.file.Files.createTempDirectory("graft_mv").toString + "/mv"
 
-  private def registerOrdersMv(): String = {
+  private def registerOrdersMv(fact: String = factPath): String = {
     val mvPath = freshMv()
-    MaterializedViews.buildAndRegister(spark, factPath, mvPath,
+    MaterializedViews.buildAndRegister(spark, fact, mvPath,
       keys = Seq("o_orderstatus", "o_orderpriority"), countCol = "n",
       sums = Seq(MaterializedViews.MvSum("rev", "o_totalprice",
         Some(DecimalType(27, 4)))))
@@ -124,6 +124,19 @@ class MaterializedViewsSpec extends SparkSpec {
         .groupBy(col("o_orderstatus"))
         .agg(sum(col("o_totalprice").cast("decimal(20,2)")).as("s"))
       assert(executedPlan(badCast).contains("orders.parquet"))
+    } finally MaterializedViews.clear()
+  }
+
+  test("a relative fact path still registers: the registry key is " +
+      "FileSystem-qualified, matching the scan's root path form") {
+    val expect = query().collect().map(_.toSeq).toSet
+    registerOrdersMv(relativePath(factPath))
+    try {
+      val df = query()
+      val plan = executedPlan(df)
+      assert(!plan.contains("orders.parquet"),
+        s"relative registration never matched:\n$plan")
+      assert(df.collect().map(_.toSeq).toSet === expect)
     } finally MaterializedViews.clear()
   }
 

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class MetaAggSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_metaagg_$tag").toString + "/t"
-
   private def build(tag: String): String = {
     import spark.implicits._
     val tbl = freshTable(tag)
@@ -55,6 +52,18 @@ class MetaAggSpec extends SparkSpec {
     val truth = Snapshots.read(spark, tbl).agg(count(lit(1)),
       min(col("k")), max(col("k")), min(col("s")), max(col("s"))).head()
     assert(row === truth)
+  }
+
+  test("enable() with a relative path still fires: the registry key is " +
+      "FileSystem-qualified, matching the index's rootPath form") {
+    val tbl = build("rel")
+    MetaAgg.enable(spark, relativePath(tbl))
+    try {
+      val q = Snapshots.readIndexed(spark, tbl)._1.agg(count(lit(1)).as("n"))
+      assert(q.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        s"relative enable never matched:\n${q.queryExecution.optimizedPlan}")
+      assert(q.head().getLong(0) === Snapshots.read(spark, tbl).count())
+    } finally MetaAgg.clear()
   }
 
   test("unprovable shapes keep their plan and stay correct: count(col) " +

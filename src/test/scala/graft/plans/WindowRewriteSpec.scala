@@ -110,6 +110,15 @@ class WindowRewriteSpec extends SparkSpec {
     }
   }
 
+  test("enable() with a relative path still fires: the registry key is " +
+      "FileSystem-qualified, matching the scan's root path form") {
+    WindowRewrite.enable(spark, relativePath(factPath))
+    try {
+      val plan = executedPlan(selfAggJoin(), execute = false)
+      assert(!plan.contains("Join"), s"relative enable never matched:\n$plan")
+    } finally WindowRewrite.clear()
+  }
+
   test("no rewrite: unregistered path") {
     WindowRewrite.clear()
     val plan = executedPlan(selfAggJoin(), execute = false)

@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
   */
 class ClusteringSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_cl_$tag").toString + "/t"
-
   private def li = spark.read.parquet(s"$sf001/lineitem.parquet")
     .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
       col("l_quantity"))
@@ -20,22 +17,22 @@ class ClusteringSpec extends SparkSpec {
     val tbl = freshTable("z")
     Snapshots.commit(li.repartition(8), tbl,
       statsCols = Seq("l_partkey", "l_suppkey"))
-    val box = Seq(("l_partkey", 1L, 25L), ("l_suppkey", 1L, 2L))
+    val box = col("l_partkey").between(1L, 25L) &&
+      col("l_suppkey").between(1L, 2L)
     // scattered: every file spans the domain — nothing prunes
-    val before = Snapshots.scanPrunedBox(spark, tbl, box)
-    assert(before.filesSkipped === 0)
+    val before = indexedFilter(tbl, box)
+    assert(before.skipped === 0)
     Snapshots.setClustering(spark, tbl, "zorder(l_partkey,l_suppkey)")
     assert(Snapshots.clustering(spark, tbl) ===
       Some(("zorder", Seq("l_partkey", "l_suppkey"))))
     Snapshots.compactVersion(spark, tbl, targetBytes = 8L << 10)
-    val after = Snapshots.scanPrunedBox(spark, tbl, box)
-    assert(after.filesSkipped > 0,
-      s"expected a file cut, read ${after.filesRead} skipped 0")
+    val after = indexedFilter(tbl, box)
+    assert(after.skipped > 0,
+      s"expected a file cut, read ${after.kept} skipped 0")
     // exactness: pruned scan ≡ full filter, and full content survived
     val expect = li.filter(col("l_partkey").between(1, 25) &&
       col("l_suppkey").between(1, 2)).count()
-    assert(after.df.filter(col("l_partkey").between(1, 25) &&
-      col("l_suppkey").between(1, 2)).count() === expect)
+    assert(after.rows.size === expect)
     assert(Snapshots.read(spark, tbl).count() === li.count())
   }
 
@@ -45,8 +42,8 @@ class ClusteringSpec extends SparkSpec {
     Snapshots.commit(li.repartition(6), tbl, statsCols = Seq("l_orderkey"))
     Snapshots.setClustering(spark, tbl, "sort(l_orderkey)")
     Snapshots.compactVersion(spark, tbl, targetBytes = 8L << 10)
-    val pruned = Snapshots.scanPruned(spark, tbl, "l_orderkey", 1L, 50L)
-    assert(pruned.filesSkipped > 0)
+    val pruned = indexedFilter(tbl, col("l_orderkey").between(1L, 50L))
+    assert(pruned.skipped > 0)
     // inherited across an unrelated append
     Snapshots.commit(li.limit(5), tbl)
     assert(Snapshots.clustering(spark, tbl) ===

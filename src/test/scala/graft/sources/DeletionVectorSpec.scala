@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class DeletionVectorSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_dv_$tag").toString + "/t"
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
 

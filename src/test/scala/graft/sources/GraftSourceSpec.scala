@@ -12,9 +12,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 class GraftSourceSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_fmt_$tag").toString + "/t"
-
   test("write/read roundtrip through format(\"graft\"): append, " +
       "overwrite, error-if-exists, ignore") {
     import spark.implicits._

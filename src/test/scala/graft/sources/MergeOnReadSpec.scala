@@ -6,9 +6,6 @@ import org.apache.spark.sql.functions._
 
 class MergeOnReadSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_mor_$tag").toString + "/t"
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
 
@@ -87,9 +84,9 @@ class MergeOnReadSpec extends SparkSpec {
     assert(m.forall(e => !Snapshots.isTombstone(e.path)))
     // all normal readers work again and content is the subtracted set
     assert(keysOf(Snapshots.read(spark, tbl)) === expect)
-    // stats carried: pruned scan on the compacted table
-    val ps = Snapshots.scanPruned(spark, tbl, "o_orderkey", 200L, 300L)
-    assert(ps.df.count() ===
+    // stats carried: pruned read on the compacted table
+    val ps = indexedFilter(tbl, col("o_orderkey").between(200L, 300L))
+    assert(ps.rows.size ===
       orders.filter(col("o_orderkey").between(200, 300)).count())
   }
 

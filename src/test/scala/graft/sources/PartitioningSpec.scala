@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class PartitioningSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_pt_$tag").toString + "/t"
-
   // the driver's testdata ships o_orderdate as TIMESTAMP in some
   // generations — normalize to DATE so literal comparisons and Row
   // accessors are stable

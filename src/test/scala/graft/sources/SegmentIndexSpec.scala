@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class SegmentIndexSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_segix_$tag").toString + "/t"
-
   private def fs(table: String) =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -33,14 +30,15 @@ class SegmentIndexSpec extends SparkSpec {
     buildKeyed(tbl)
     val nSegs = Snapshots.buildSegmentIndex(spark, tbl, segSize = 4)
     assert(nSegs === 8)
-    val seg = Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 9L, 14L)))
-    val flat = Snapshots.scanPrunedBox(spark, tbl, Seq(("k", 9L, 14L)))
+    val (df, ix) = Snapshots.readIndexed(spark, tbl)
+    val got = df.filter(col("k").between(9L, 14L))
+      .orderBy("k", "v").collect().toSeq
     // keys 9..14 live in files 9..14 -> segments 2 (8-11) and 3 (12-15)
-    assert(seg.segmentsRead === 2 && seg.segmentsSkipped === 6)
-    assert(seg.filesRead === flat.filesRead)
-    assert(seg.filesRead + seg.filesSkipped === 32)
-    assert(seg.df.orderBy("k", "v").collect().toSeq ===
-      flat.df.orderBy("k", "v").collect().toSeq)
+    assert(ix.lastSegPrune === ((2, 8)))
+    assert(ix.lastPrune === ((6, 32)))
+    val flat = Snapshots.read(spark, tbl).filter(col("k").between(9L, 14L))
+      .orderBy("k", "v").collect().toSeq
+    assert(got === flat)
   }
 
   test("build is idempotent and a prebuilt index serves without the " +
@@ -54,13 +52,12 @@ class SegmentIndexSpec extends SparkSpec {
     val mtime = fs(tbl).getFileStatus(ixPath).getModificationTime
     assert(Snapshots.buildSegmentIndex(spark, tbl, segSize = 8) === 4)
     assert(fs(tbl).getFileStatus(ixPath).getModificationTime === mtime)
-    // the segmented scan never opens the flat manifest: make it
+    // the segment-planned read never opens the flat manifest: make it
     // unreadable and scan anyway (versions() still lists from the file
     // name, so resolve the version explicitly)
-    val seg = Snapshots.scanPrunedBoxSegmented(spark, tbl,
-      Seq(("k", 0L, 3L)), version = Some(1))
-    assert(seg.segmentsRead === 1 && seg.segmentsSkipped === 3)
-    assert(seg.df.count() === 8) // 4 keys x 2 rows
+    val (df, ix) = Snapshots.readIndexed(spark, tbl, Some(1))
+    assert(df.filter(col("k").between(0L, 3L)).count() === 8) // 4 keys x 2
+    assert(ix.lastSegPrune === ((1, 4)))
   }
 
   test("incremental build: an append reuses the parent's full segments " +
@@ -81,21 +78,21 @@ class SegmentIndexSpec extends SparkSpec {
     assert(written === Array("index", "seg-00008"),
       s"append must write only the tail segment, wrote ${written.toSeq}")
     // the reused segments serve scans exactly like a full rebuild would
-    val seg = Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 9L, 14L)))
-    assert(seg.segmentsRead === 2 && seg.segmentsSkipped === 7)
-    assert(seg.filesRead + seg.filesSkipped === 34)
-    assert(seg.df.count() === 12)
-    val tail = Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 32L, 40L)))
-    assert(tail.segmentsRead === 1 && tail.df.count() === 2)
+    val (df, ix) = Snapshots.readIndexed(spark, tbl)
+    assert(df.filter(col("k").between(9L, 14L)).count() === 12)
+    assert(ix.lastSegPrune === ((2, 9)))
+    assert(ix.lastPrune._2 === 34)
+    assert(df.filter(col("k").between(32L, 40L)).count() === 2)
+    assert(ix.lastSegPrune._1 === 1)
     // compaction rewrites the layout: the prefix proof fails and the
     // index rebuilds in full under the new version's own dir
     val v3 = Snapshots.compactVersion(spark, tbl)
     assert(Snapshots.buildSegmentIndex(spark, tbl, segSize = 4) >= 1)
     val v3dir = new Path(f"$tbl/_manifests/v$v3%06d.segments")
     val v3Files = fs(tbl).listStatus(v3dir).map(_.getPath.getName)
-    assert(v3Files.count(_.startsWith("seg-")) ===
-      Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", Long.MinValue,
-        Long.MaxValue))).segmentsRead,
+    val (df3, ix3) = Snapshots.readIndexed(spark, tbl)
+    df3.count()
+    assert(v3Files.count(_.startsWith("seg-")) === ix3.lastSegPrune._1,
       "full rebuild must own every segment it serves")
   }
 
@@ -110,32 +107,33 @@ class SegmentIndexSpec extends SparkSpec {
     assert(n === 1)
     // probe far away from both keys: the segment contains a stat-less
     // file, so its rolled envelope must NOT claim coverage of k
-    val seg = Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 50L, 60L)))
-    assert(seg.segmentsRead === 1, "stat-less member must keep the segment")
-    assert(seg.df.count() === 0) // residual filter still exact
+    val (df, ix) = Snapshots.readIndexed(spark, tbl)
+    assert(df.filter(col("k").between(50L, 60L)).count() === 0) // exact
+    assert(ix.lastSegPrune === ((1, 1)),
+      "stat-less member must keep the segment")
   }
 
-  test("scan refuses a version without an index; half-written index " +
-      "reads as absent") {
+  test("a version without an index plans from the flat manifest; a " +
+      "half-written index reads as absent") {
     val tbl = freshTable("crash")
     buildKeyed(tbl)
-    val e = intercept[IllegalStateException] {
-      Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 0L, 1L)))
+    /** (rows, segment cut, file cut) of the k in [0,1] probe. */
+    def probe(): (Long, (Int, Int), (Int, Int)) = {
+      val (df, ix) = Snapshots.readIndexed(spark, tbl)
+      val n = df.filter(col("k").between(0L, 1L)).count()
+      (n, ix.lastSegPrune, ix.lastPrune)
     }
-    assert(e.getMessage.contains("buildSegmentIndex"))
+    assert(probe() === ((4L, (0, 0), (2, 32))))
     // simulate a crashed builder: index present but terminator-less
     val dir = new Path(s"$tbl/_manifests/v000001.segments")
     fs(tbl).mkdirs(dir)
     val out = fs(tbl).create(new Path(dir, "index"), true)
     out.write("graft-manifest-v1\nseg-00000\t64\tk=0:31".getBytes("UTF-8"))
     out.close()
-    intercept[IllegalStateException] {
-      Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 0L, 1L)))
-    }
-    // a later complete build repairs it
+    assert(probe() === ((4L, (0, 0), (2, 32))))
+    // a later complete build repairs it, and planning moves to segments
     assert(Snapshots.buildSegmentIndex(spark, tbl, segSize = 16) === 2)
-    assert(Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 0L, 1L)))
-      .df.count() === 4)
+    assert(probe() === ((4L, (1, 2), (2, 32))))
   }
 
   test("segment blooms OR soundly: equality probe via index evidence") {
@@ -145,13 +143,12 @@ class SegmentIndexSpec extends SparkSpec {
       .repartition(8, col("k"))
     Snapshots.commit(df, tbl, bloomCols = Seq("k"))
     Snapshots.buildSegmentIndex(spark, tbl, segSize = 4)
-    val (fsys, root) = (fs(tbl), new Path(tbl))
-    // read the index back through the public scan: a box on a column
-    // with no range stats keeps everything (blooms are rolled, ranges
-    // absent), and the result is still exact
-    val seg = Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 3L, 3L)))
-    assert(seg.df.count() === 1)
-    assert(seg.segmentsRead + seg.segmentsSkipped === 2)
+    // read the index back through the indexed read: the equality probe
+    // consults the rolled blooms (ranges are absent), may not drop the
+    // segment holding k = 3, and the result is still exact
+    val (indexed, ix) = Snapshots.readIndexed(spark, tbl)
+    assert(indexed.filter(col("k") === 3L).count() === 1)
+    assert(ix.lastSegPrune._1 >= 1 && ix.lastSegPrune._2 === 2)
   }
 
   test("readIndexed PLANS from the segment tier when an index exists: " +

@@ -6,9 +6,6 @@ import org.apache.spark.sql.functions._
 
 class SnapshotsSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_snap_$tag").toString + "/t"
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
 
@@ -43,18 +40,19 @@ class SnapshotsSpec extends SparkSpec {
     }
   }
 
-  test("scanPruned skips files by manifest envelope and loses no rows") {
+  test("an indexed range filter skips files by manifest envelope and " +
+      "loses no rows") {
     val tbl = freshTable("skip")
     Snapshots.commit(orders.repartitionByRange(8, col("o_orderkey")), tbl,
       statsCols = Seq("o_orderkey"))
-    val ps = Snapshots.scanPruned(spark, tbl, "o_orderkey", 1L, 500L)
-    assert(ps.filesSkipped > 0, "tight range over 8 range-files must skip some")
-    assert(ps.filesRead + ps.filesSkipped === 8)
+    val ps = indexedFilter(tbl, col("o_orderkey").between(1L, 500L))
+    assert(ps.skipped > 0, "tight range over 8 range-files must skip some")
+    assert(ps.total === 8)
     val expect = orders.filter(col("o_orderkey").between(1, 500)).count()
-    assert(ps.df.count() === expect)
+    assert(ps.rows.size === expect)
     // a column without recorded stats never skips (correctness over speed)
-    val ps2 = Snapshots.scanPruned(spark, tbl, "o_totalprice", 0L, 1L)
-    assert(ps2.filesSkipped === 0 && ps2.filesRead === 8)
+    val ps2 = indexedFilter(tbl, col("o_totalprice").between(0L, 1L))
+    assert(ps2.skipped === 0 && ps2.kept === 8)
   }
 
   test("compactVersion shrinks file count, preserves content and history") {
@@ -94,21 +92,22 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.read(spark, tbl2).count() === 200)
   }
 
-  test("scanPrunedEq skips files via manifest blooms, soundly") {
+  test("an indexed equality filter skips files via manifest blooms, " +
+      "soundly") {
     val tbl = freshTable("bloom")
     val o = spark.read.parquet(s"$sf001/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"))
     Snapshots.commit(o.repartition(8, col("o_custkey")), tbl,
       bloomCols = Seq("o_custkey"))
     val cust = o.agg(min(col("o_custkey"))).head().getLong(0)
-    val ps = Snapshots.scanPrunedEq(spark, tbl, "o_custkey", cust)
+    val ps = indexedFilter(tbl, col("o_custkey") === cust)
     // the customer hashes into ONE of the 8 custkey-clustered files;
     // blooms must prove absence for most of the rest (false positives ok)
-    assert(ps.filesSkipped >= 4, s"skipped only ${ps.filesSkipped}/8")
-    assert(ps.df.count() === o.filter(col("o_custkey") === cust).count())
+    assert(ps.skipped >= 4, s"skipped only ${ps.skipped}/8")
+    assert(ps.rows.size === o.filter(col("o_custkey") === cust).count())
     // a column without a bloom never skips
-    val ps2 = Snapshots.scanPrunedEq(spark, tbl, "o_orderkey", 1L)
-    assert(ps2.filesSkipped === 0)
+    val ps2 = indexedFilter(tbl, col("o_orderkey") === 1L)
+    assert(ps2.skipped === 0)
     // blooms survive compaction (carried like statsCols)
     Snapshots.compactVersion(spark, tbl, targetBytes = 1L << 14)
     val after = Snapshots.manifest(spark, tbl,
@@ -116,9 +115,9 @@ class SnapshotsSpec extends SparkSpec {
     assert(after.forall(_.blooms.contains("o_custkey")))
   }
 
-  test("dimPrunedScan cuts fact files from a selective dim's join keys " +
-      "(envelope + bloom), loses no rows, casts key widths, refuses " +
-      "unselective dims") {
+  test("a DimFilePrune-enabled join cuts fact files from a selective " +
+      "dim's join keys (envelope + bloom), loses no rows, casts key " +
+      "widths, declines unselective dims") {
     val tbl = freshTable("dfp")
     val li = spark.read.parquet(s"$sf001/lineitem.parquet")
       .select(col("l_suppkey"), col("l_extendedprice"))
@@ -133,31 +132,42 @@ class SnapshotsSpec extends SparkSpec {
       .select(col("s_suppkey"))
     val dimKeys = dim.collect().map(_.getLong(0)).toSet
     assert(dimKeys.nonEmpty)
-    val ps = Snapshots.dimPrunedScan(spark, tbl, "l_suppkey",
-      dim, "s_suppkey")
-    // the key is range-clustered, the dim is 1/25 of the key space —
-    // envelopes alone must cut files
-    assert(ps.filesSkipped > 0,
-      s"no file cut: read ${ps.filesRead}, skipped ${ps.filesSkipped}")
-    val want = li.filter(col("l_suppkey").isInCollection(dimKeys)).count()
-    assert(ps.df.count() === want)
-    // width-normalized hashing: an INT-typed dim key column must probe
-    // the LONG fact column's blooms correctly (cast before hash)
-    val psInt = Snapshots.dimPrunedScan(spark, tbl, "l_suppkey",
-      dim.select(col("s_suppkey").cast("int").as("s_suppkey")), "s_suppkey")
-    assert(psInt.df.count() === want,
-      "int-typed dim keys lost rows against the long fact column")
-    // empty dim → zero files read, empty result
-    val psEmpty = Snapshots.dimPrunedScan(spark, tbl, "l_suppkey",
-      dim.limit(0), "s_suppkey")
-    assert(psEmpty.filesRead === 0 && psEmpty.df.count() === 0L)
-    // unselective dim refuses loudly toward the plain join
-    val e = intercept[IllegalArgumentException] {
-      Snapshots.dimPrunedScan(spark, tbl, "l_suppkey",
-        li.select(col("l_suppkey").as("s_suppkey")), "s_suppkey",
-        maxKeys = 3)
+    import graft.plans.DimFilePrune
+    /** Rows of the plain fact ⋉ dim join and the rule's (kept, skipped)
+      * cut — None when the rule declined.
+      */
+    def semiJoin(fact: String, key: String, d: org.apache.spark.sql.DataFrame,
+        dk: String): (Long, Option[(Int, Int)]) = {
+      DimFilePrune.lastCut = None
+      val n = Snapshots.readIndexed(spark, fact)._1
+        .join(d, col(key) === d(dk), "left_semi").count()
+      (n, DimFilePrune.lastCut.map(c => (c._2, c._3)))
     }
-    assert(e.getMessage.contains("unselective"))
+    DimFilePrune.enable(spark, tbl)
+    try {
+      val (n, cut) = semiJoin(tbl, "l_suppkey", dim, "s_suppkey")
+      // the key is range-clustered, the dim is 1/25 of the key space —
+      // envelopes alone must cut files
+      assert(cut.exists(_._2 > 0), s"no file cut: $cut")
+      val want = li.filter(col("l_suppkey").isInCollection(dimKeys)).count()
+      assert(n === want)
+      // width-normalized hashing: an INT-typed dim key column must probe
+      // the LONG fact column's blooms correctly (narrowed before hash)
+      val (nInt, cutInt) = semiJoin(tbl, "l_suppkey",
+        dim.select(col("s_suppkey").cast("int").as("s_suppkey")),
+        "s_suppkey")
+      assert(cutInt.nonEmpty && nInt === want,
+        "int-typed dim keys lost rows against the long fact column")
+      // empty dim → zero files kept, empty result
+      val (nEmpty, cutEmpty) = semiJoin(tbl, "l_suppkey",
+        dim.filter(col("s_suppkey") < 0), "s_suppkey")
+      assert(cutEmpty === Some((0, 8)) && nEmpty === 0L)
+      // unselective dim: the rule declines, the plain join stays exact
+      DimFilePrune.enable(spark, tbl, maxKeys = 3)
+      val wide = li.select(col("l_suppkey").as("s_suppkey"))
+      val (nWide, cutWide) = semiJoin(tbl, "l_suppkey", wide, "s_suppkey")
+      assert(cutWide.isEmpty && nWide === li.count())
+    } finally DimFilePrune.disable(spark, tbl)
     // STRING join keys prune through the UTF-8 envelope tier: a fact
     // range-clustered on a string key, dim'd by a handful of values
     val tblS = freshTable("dfps")
@@ -169,12 +179,13 @@ class SnapshotsSpec extends SparkSpec {
       tblS, strStatsCols = Seq("sk"))
     val dimS = dim.select(
       concat(lit("sup-"), lpad(col("s_suppkey").cast("string"), 4, "0"))
-        .as("sk"))
-    val psS = Snapshots.dimPrunedScan(spark, tblS, "sk", dimS, "sk")
-    assert(psS.filesSkipped > 0,
-      s"no string-envelope cut: ${psS.filesRead}/${psS.filesSkipped}")
-    val wantS = liS.join(dimS, "sk").count()
-    assert(psS.df.count() === wantS)
+        .as("dsk"))
+    DimFilePrune.enable(spark, tblS)
+    try {
+      val (nS, cutS) = semiJoin(tblS, "sk", dimS, "dsk")
+      assert(cutS.exists(_._2 > 0), s"no string-envelope cut: $cutS")
+      assert(nS === liS.join(dimS, col("sk") === col("dsk")).count())
+    } finally DimFilePrune.disable(spark, tblS)
   }
 
   test("z-ordered layout + box pruning beats a linear layout") {
@@ -191,15 +202,16 @@ class SnapshotsSpec extends SparkSpec {
     val linTbl = freshTable("linbox")
     Snapshots.commit(li.repartitionByRange(8, col("l_orderkey")), linTbl,
       statsCols = stats)
-    val box = Seq(("l_partkey", 1L, 25L), ("l_suppkey", 1L, 2L))
-    val z = Snapshots.scanPrunedBox(spark, zTbl, box)
-    val lin = Snapshots.scanPrunedBox(spark, linTbl, box)
-    assert(z.filesSkipped > lin.filesSkipped,
-      s"z skipped ${z.filesSkipped}, linear skipped ${lin.filesSkipped}")
+    val box = col("l_partkey").between(1L, 25L) &&
+      col("l_suppkey").between(1L, 2L)
+    val z = indexedFilter(zTbl, box)
+    val lin = indexedFilter(linTbl, box)
+    assert(z.skipped > lin.skipped,
+      s"z skipped ${z.skipped}, linear skipped ${lin.skipped}")
     // both layouts return the exact filter result
     val expect = li.filter(col("l_partkey").between(1, 25) &&
       col("l_suppkey").between(1, 2)).count()
-    assert(z.df.count() === expect && lin.df.count() === expect)
+    assert(z.rows.size === expect && lin.rows.size === expect)
   }
 
   test("half-written manifest (no terminator) reads as an absent version") {
@@ -257,10 +269,9 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.read(spark, tbl, Some(3)).count() === nOrig)
     // carried entries keep their envelopes → file skipping still works on
     // a range no carried file covers
-    val ps = Snapshots.scanPruned(spark, tbl, "o_orderkey",
-      1000000L, 2000000L)
-    assert(ps.filesSkipped > 0)
-    assert(ps.df.count() === 0)
+    val ps = indexedFilter(tbl, col("o_orderkey").between(1000000L, 2000000L))
+    assert(ps.skipped > 0)
+    assert(ps.rows.isEmpty)
   }
 
   test("merge key resolves case-insensitively, like col()/SQL — the " +
@@ -477,21 +488,22 @@ class SnapshotsSpec extends SparkSpec {
     assert(h(1).getString(3) === "src=b")
   }
 
-  test("scanPrunedStr skips files by UTF-8 envelope and loses no rows") {
+  test("an indexed string-range filter skips files by UTF-8 envelope " +
+      "and loses no rows") {
     val tbl = freshTable("strskip")
     val o = spark.read.parquet(s"$sf001/orders.parquet")
       .select(col("o_orderkey"), col("o_orderpriority"))
     Snapshots.commit(o.repartitionByRange(5, col("o_orderpriority")), tbl,
       strStatsCols = Seq("o_orderpriority"))
-    val ps = Snapshots.scanPrunedStr(spark, tbl, "o_orderpriority",
-      "1-URGENT", "2-HIGH")
-    assert(ps.filesSkipped > 0, "priority-clustered files must skip")
+    val ps = indexedFilter(tbl,
+      col("o_orderpriority").between("1-URGENT", "2-HIGH"))
+    assert(ps.skipped > 0, "priority-clustered files must skip")
     val expect = o.filter(col("o_orderpriority")
       .between("1-URGENT", "2-HIGH")).count()
-    assert(ps.df.count() === expect)
-    // a column without recorded string stats never skips
-    val ps2 = Snapshots.scanPrunedStr(spark, tbl, "o_orderkey", "a", "b")
-    assert(ps2.filesSkipped === 0)
+    assert(ps.rows.size === expect)
+    // a column without recorded stats never skips
+    val ps2 = indexedFilter(tbl, col("o_orderkey").between(1L, 2L))
+    assert(ps2.skipped === 0)
     // envelopes survive incremental compaction (carried like statsCols)
     Snapshots.commit(o.limit(10), tbl)
     val sizes = Snapshots.manifest(spark, tbl, 2).map(e =>

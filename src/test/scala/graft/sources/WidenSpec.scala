@@ -10,9 +10,6 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
   */
 class WidenSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_wd_$tag").toString + "/t"
-
   test("int→long widens metadata-only: old files read cast, new files " +
       "store long natively, values beyond int range land, time travel " +
       "keeps each version's width") {
@@ -38,7 +35,8 @@ class WidenSpec extends SparkSpec {
     assert(Snapshots.read(spark, tbl, Some(1)).schema("k").dataType ===
       org.apache.spark.sql.types.IntegerType)
     // pruning evidence still works across the widen (stats are longs)
-    assert(Snapshots.scanPruned(spark, tbl, "k", big, big).df.count() === 1)
+    assert(indexedFilter(tbl, col("k") === big, evolved = true)
+      .rows.size === 1)
   }
 
   test("bloom scans across a widen probe pre-widen files at their " +
@@ -58,17 +56,17 @@ class WidenSpec extends SparkSpec {
     // a LONG-typed probe of an era-1 value: the int-era file's bloom was
     // hashed at int width — pre-fix this false-rejected the file and the
     // scan silently lost the row
-    val ps = Snapshots.scanPrunedEq(spark, tbl, "k", 5L)
-    assert(ps.df.count() === 1L,
+    val ps = indexedFilter(tbl, col("k") === 5L, evolved = true)
+    assert(ps.rows.size === 1,
       "widened bloom probe lost the pre-widen row")
-    assert(ps.filesSkipped > 0, "bloom pruning power lost entirely")
-    // IN-scan across both eras: era-1 value + era-2 beyond-int value
-    val psIn = Snapshots.scanPrunedIn(spark, tbl, "k", Seq(7L, big))
-    assert(psIn.df.collect().map(_.getLong(0)).toSet === Set(7L, big))
+    assert(ps.skipped > 0, "bloom pruning power lost entirely")
+    // IN-filter across both eras: era-1 value + era-2 beyond-int value
+    val psIn = indexedFilter(tbl, col("k").isin(7L, big), evolved = true)
+    assert(psIn.rows.map(_.getLong(0)).toSet === Set(7L, big))
     // absent values still skip every file (the narrow probe must not
     // blanket-keep)
-    val psAbs = Snapshots.scanPrunedEq(spark, tbl, "k", 999L)
-    assert(psAbs.df.count() === 0L)
+    val psAbs = indexedFilter(tbl, col("k") === 999L, evolved = true)
+    assert(psAbs.rows.isEmpty && psAbs.kept === 0)
     // float→double widen with a NaN row: Java NaN != NaN breaks the
     // lossless-roundtrip check, but Spark SQL equality MATCHES NaN —
     // the probe must still try the float representation
@@ -80,11 +78,11 @@ class WidenSpec extends SparkSpec {
     Snapshots.widenColumn(spark, ftbl, "x", DoubleType)
     Snapshots.commit(Seq((4, 4.5)).toDF("k", "x").coalesce(1), ftbl,
       bloomCols = Seq("x"))
-    val psNaN = Snapshots.scanPrunedEq(spark, ftbl, "x", Double.NaN)
-    assert(psNaN.df.count() === 1L,
+    val psNaN = indexedFilter(ftbl, col("x") === Double.NaN, evolved = true)
+    assert(psNaN.rows.size === 1,
       "NaN probe lost the pre-widen float-era row")
-    val psF = Snapshots.scanPrunedEq(spark, ftbl, "x", 1.5d)
-    assert(psF.df.count() === 1L)
+    val psF = indexedFilter(ftbl, col("x") === 1.5d, evolved = true)
+    assert(psF.rows.size === 1)
   }
 
   test("float→double widens; narrowing and cross-family casts refuse; " +
